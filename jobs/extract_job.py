@@ -27,6 +27,18 @@ except ModuleNotFoundError:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+def session() -> SparkSession:
+    """The job's session with the engine's SQL settings (``SQL_CONF``).
+    getOrCreate: under spark-submit the session/master comes from the
+    launcher; standalone it falls back to the local defaults."""
+    from riptide_spark.session import SQL_CONF
+
+    spark = SparkSession.builder.appName("riptide-extract").getOrCreate()
+    for key, value in SQL_CONF.items():
+        spark.conf.set(key, value)
+    return spark
+
+
 def main() -> None:
     parser = argparse.ArgumentParser()
     parser.add_argument("--input", help="pages parquet dir (url, warc_ts, html, text, lang)")
@@ -46,11 +58,7 @@ def main() -> None:
     parser.add_argument("--no-resume", action="store_true")
     args = parser.parse_args()
 
-    # getOrCreate: under spark-submit the session/master comes from the
-    # launcher; standalone it falls back to the local defaults.
-    spark = SparkSession.builder.appName("riptide-extract").getOrCreate()
-    spark.conf.set("spark.sql.legacy.codingErrorAction", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = session()
 
     from riptide_spark.operators.partitioning import discover_hot_hosts
     from riptide_spark.plans.pipeline import ExtractionJobConfig, run_extraction_job

@@ -6,7 +6,7 @@ per SURVEY.md §3.1:
 
     read pages → anti-join(done urls)            # Redis result cache → J1
               → gate feature/score/route columns # P5-P8, pure codegen
-              → bucketed-hash + salted shuffle   # north-rule partitioning
+              → url_bucket (+ salt) columns      # north-rule partitioning
               → Arrow extraction UDF             # E1-E15 (+ escalation, PDF)
               → append output table + manifest   # cache store / S5-S6
               → per-partition metrics sidecar    # A1-A2
@@ -19,8 +19,11 @@ Plan properties worth knowing at 100 TB:
   column pruning.
 * probes-first escalation happens row-locally inside the UDF — no second
   shuffle (see extract_udf.py).
-* one wide shuffle total (the bucket/salt repartition before extraction);
-  everything after is narrow.
+* with ``target_partitions`` set, one wide shuffle total (the bucket/salt
+  repartition before extraction); without it (the shipped default) the plan
+  has no shuffle at all. Everything after the UDF is narrow.
+* one pass over the extracted rows: the append counts them inside the write,
+  and the sidecar reads back only the files this run wrote.
 """
 
 from __future__ import annotations
@@ -168,11 +171,11 @@ def run_extraction_job(
 
     Single-pass design: the UDF output streams straight into the table
     append (no intermediate cache/checkpoint — one materialization of the
-    expensive stage). The metrics sidecar and the row count are derived by
-    *reading back* the just-written table filtered on the ``run_id``
-    lineage column — a column-pruned scan of five small columns, immune to
-    the cached-plan invalidation that a resume anti-join would otherwise
-    suffer when its source table is appended to."""
+    expensive stage), which counts the rows inside the write and commits
+    them in the run's manifest. The metrics sidecar reads back only the
+    files that manifest lists, with the schema the job wrote — a
+    column-pruned scan that grows with the run, not the table, and never
+    re-runs the extraction UDF."""
     run_id = run_id or uuid.uuid4().hex[:12]
     output = TableIO(spark, config.output_path)
 
@@ -200,21 +203,18 @@ def run_extraction_job(
     result = extraction_plan(pages, config).withColumn("run_id", F.lit(run_id))
 
     partition_cols = ["url_bucket"] if config.write_partitioned_by_bucket else None
-    output.append(
-        result.select(*OUTPUT_COLUMNS, "run_id", "url_bucket"),
-        run_id=run_id,
-        partition_by=partition_cols,
-    )
-
-    written = output.read().filter(F.col("run_id") == run_id)
-    rows = written.count()
-    # Record the true count in the manifest ledger — the next resumed run
-    # derives its skipped-row stat from these instead of re-counting input.
-    output.amend_manifest(run_id, rows=rows)
+    written = result.select(*OUTPUT_COLUMNS, "run_id", "url_bucket")
+    # The manifest's row count is what the next resumed run sums for its
+    # skipped-row stat instead of re-counting input.
+    manifest = output.append(written, run_id=run_id, partition_by=partition_cols)
     if config.metrics_path:
-        metrics = partition_metrics(written, run_id)
-        TableIO(spark, config.metrics_path).append(metrics, run_id=run_id)
+        own = output.read_files(manifest.files, written.schema)
+        TableIO(spark, config.metrics_path).append(
+            partition_metrics(own, run_id), run_id=run_id
+        )
 
     # Every surviving input row lands in the output (errors become error
-    # rows, never drops), so the manifest-derived count needs no adjustment.
-    return RunResult(run_id=run_id, rows_written=rows, rows_skipped_resume=skipped)
+    # rows, never drops), so the observed count needs no adjustment.
+    return RunResult(
+        run_id=run_id, rows_written=manifest.rows, rows_skipped_resume=skipped
+    )

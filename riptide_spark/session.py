@@ -33,6 +33,30 @@ ARROW_MAX_BYTES = int(
 )
 
 
+# Spark SQL settings every entry point runs with: ``build_session`` passes
+# them to the builder, ``jobs/extract_job.py`` sets them on the session the
+# launcher made. Shuffle partitions are not here: they are sized per host.
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS),
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(ARROW_MAX_BYTES),
+    "spark.sql.session.timeZone": "UTC",
+    # Lossy UTF-8 decode (U+FFFD replacement) for the html binary column,
+    # matching Rust String::from_utf8_lossy (pipeline.rs:332). Without
+    # this Spark 4's decode() raises MALFORMED_CHARACTER_CODING.
+    "spark.sql.legacy.codingErrorAction": "true",
+    # List table paths on the driver. Above the default of 32 paths Spark
+    # lists with a distributed job (about 1 s per read on 4 vCPUs); a table
+    # read hands Spark one directory per url_bucket (64) and the sidecar
+    # read one path per file the run wrote. TableIO already walks the same
+    # tree on the driver; on Iceberg, reads are planned from manifests.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "10000",
+}
+
+
 def build_session(
     app_name: str = "riptide-spark",
     master: str | None = None,
@@ -46,25 +70,15 @@ def build_session(
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus else 32
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(ARROW_MAX_BYTES))
-        .config("spark.sql.session.timeZone", "UTC")
-        # Lossy UTF-8 decode (U+FFFD replacement) for the html binary column,
-        # matching Rust String::from_utf8_lossy (pipeline.rs:332). Without
-        # this Spark 4's decode() raises MALFORMED_CHARACTER_CODING.
-        .config("spark.sql.legacy.codingErrorAction", "true")
-        .config("spark.python.worker.reuse", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    )
-    for key, value in (extra_conf or {}).items():
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
+        **SQL_CONF,
+        "spark.python.worker.reuse": "true",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+        **(extra_conf or {}),
+    }
+    builder = SparkSession.builder.appName(app_name).master(master)
+    for key, value in conf.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

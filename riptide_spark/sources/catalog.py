@@ -7,8 +7,10 @@ module provides the same *semantics* behind a two-line abstraction:
 * a table is a directory of parquet files plus ``_manifests/run-*.json``
   checkpoint manifests (run id, row count, files written, completion flag);
 * ``append`` = parquet append + a manifest committed **after** the data (the
-  manifest is the commit marker, like an Iceberg snapshot);
-* ``read`` = read the parquet dir;
+  manifest is the commit marker, like an Iceberg snapshot), with the row
+  count observed inside the write;
+* ``read`` = read the parquet dir; ``read_files`` = read only the files a
+  manifest lists, as Iceberg plans a snapshot read from its manifests;
 * resume = anti-join against the table's committed urls (the result cache
   J1/S2 of SURVEY.md — the output table *is* the cache).
 
@@ -24,7 +26,9 @@ import os
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 @dataclass
@@ -58,19 +62,11 @@ class TableIO:
         orphaned rows (they are valid extractions), otherwise the rerun
         would duplicate them. Manifests are lineage, not the liveness
         signal."""
-        if not os.path.isdir(self.data_path):
-            return False
-        try:
-            return any(
-                name.endswith(".parquet")
-                for name in os.listdir(self.data_path)
-            ) or any(
-                f.endswith(".parquet")
-                for _, _, files in os.walk(self.data_path)
-                for f in files
-            )
-        except OSError:
-            return False
+        return any(
+            name.endswith(".parquet")
+            for _, _, files in os.walk(self.data_path)
+            for name in files
+        )
 
     def manifests(self) -> list[Manifest]:
         if not os.path.isdir(self.manifest_dir):
@@ -104,8 +100,10 @@ class TableIO:
     def ledger_complete(self) -> bool:
         """True iff the committed manifests' file ledger EQUALS the set of
         data files on disk AND every committed manifest has a known row
-        count. Disk ⊆ ledger rules out orphan files from a crash between a
-        data write and its manifest commit; ledger ⊆ disk rules out the
+        count (``append`` commits the count it observed in the write, so
+        ``rows=-1`` appears only in manifests written before it did). Disk
+        ⊆ ledger rules out orphan files from a crash between a data write
+        and its manifest commit; ledger ⊆ disk rules out the
         converse hole — a recorded file vacuumed/compacted/deleted after
         commit, which would leave ``sum(m.rows)`` over-counting the done
         side while the fast path still trusted it. Only under set equality
@@ -122,34 +120,44 @@ class TableIO:
     def read(self) -> DataFrame:
         return self.spark.read.parquet(self.data_path)
 
+    def read_files(self, files: list[str], schema: StructType) -> DataFrame:
+        """Read only ``files`` (data-dir-relative, as a manifest lists them)
+        with a known ``schema``: the scan grows with those files, not the
+        table, and skips schema inference. ``basePath`` keeps the Hive
+        partition columns (``url_bucket``)."""
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        paths = [os.path.join(self.data_path, f) for f in files]
+        return (
+            self.spark.read.schema(schema)
+            .option("basePath", self.data_path)
+            .parquet(*paths)
+        )
+
     def append(
         self,
         df: DataFrame,
         run_id: str | None = None,
         partition_by: list[str] | None = None,
-        rows: int = -1,
     ) -> Manifest:
-        """Write data, then commit the manifest (write-then-commit ordering:
-        a crash between the two leaves an uncommitted snapshot that the next
-        run's anti-join silently resolves — the urls are present, so they are
-        skipped; no duplicates, no loss). ``rows`` is lineage metadata the
-        caller passes when it already knows the count (avoid a re-scan)."""
+        """Write data, then commit the manifest with the exact row count
+        (write-then-commit ordering: a crash between the two leaves an
+        uncommitted snapshot that the next run's anti-join silently
+        resolves — the urls are present, so they are skipped; no
+        duplicates, no loss). The count is observed inside the write, so
+        the manifest is committed once and never needs a re-scan."""
         run_id = run_id or uuid.uuid4().hex[:12]
-        before = set(self.data_files()) if os.path.isdir(self.data_path) else set()
-        writer = df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(self.data_path)
+        before = set(self.data_files())
+        rows = self._write_counted(df, self.data_path, "append", partition_by)
         written = [f for f in self.data_files() if f not in before]
         manifest = Manifest(run_id=run_id, rows=rows, committed=True, files=written)
         return self._write_manifest(manifest)
 
     def amend_manifest(self, run_id: str, rows: int) -> Manifest:
-        """Atomically enrich a committed manifest with the true row count
-        (the count is only known after the post-write read-back; a crash
-        between commit and amendment leaves ``rows=-1``, which consumers
-        must treat as unknown, not negative). The file ledger from the
-        original commit is preserved."""
+        """Atomically rewrite a committed manifest's row count, keeping its
+        file ledger. Nothing in the job calls this since ``append`` counts
+        its rows in the write; it stays only because the benchmark's traced
+        run wraps it by name."""
         files = None
         for m in self.manifests():
             if m.run_id == run_id:
@@ -174,8 +182,8 @@ class TableIO:
         Ordering (every crash window degrades to the slow path, never to
         wrong data):
 
-        1. write the compacted copy to a scratch dir, count it (the exact
-           row total the superseding manifest needs);
+        1. write the compacted copy to a scratch dir, counting its rows in
+           the same write (the exact total the superseding manifest needs);
         2. swap the data dir (rename old away, rename scratch in, drop old);
         3. commit ONE superseding manifest owning every surviving file;
         4. remove the superseded run manifests.
@@ -205,15 +213,10 @@ class TableIO:
         scratch = self.data_path + f".compact-{uuid.uuid4().hex[:8]}"
         if partition_by:
             # One task per partition value → one compacted file per value.
-            writer = (
-                df.repartition(*partition_by)
-                .write.mode("overwrite")
-                .partitionBy(*partition_by)
-            )
+            df = df.repartition(*partition_by)
         else:
-            writer = df.coalesce(max(target_partitions, 1)).write.mode("overwrite")
-        writer.parquet(scratch)
-        rows = self.spark.read.parquet(scratch).count()
+            df = df.coalesce(max(target_partitions, 1))
+        rows = self._write_counted(df, scratch, "overwrite", partition_by)
 
         old = self.data_path + f".pre-compact-{uuid.uuid4().hex[:8]}"
         os.rename(self.data_path, old)
@@ -237,6 +240,20 @@ class TableIO:
             if name != own:
                 os.remove(os.path.join(self.manifest_dir, name))
         return manifest
+
+    @staticmethod
+    def _write_counted(
+        df: DataFrame, path: str, mode: str, partition_by: list[str] | None
+    ) -> int:
+        """Write ``df`` as parquet and return its row count, observed in the
+        write's own final stage: only the successful attempt of each task
+        adds to it, so a retried task is counted once."""
+        observed = Observation()
+        writer = df.observe(observed, F.count(F.lit(1)).alias("rows")).write.mode(mode)
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+        return observed.get["rows"]
 
     def _write_manifest(self, manifest: Manifest) -> Manifest:
         os.makedirs(self.manifest_dir, exist_ok=True)

@@ -505,3 +505,121 @@ def test_compaction_crash_window_degrades_to_slow_path(spark, tmp_path):
     healed = run_extraction_job(spark, _pages_df(spark, n=50), cfg)
     assert healed.rows_skipped_resume == 50 and healed.rows_written == 0
     assert manifest.rows == 50
+
+
+def test_sidecar_from_own_files_matches_full_table_metrics(spark, tmp_path):
+    """The sidecar reads back only the files the run's manifest lists. On a
+    table that already holds an earlier run, its rows must equal
+    ``partition_metrics`` over the whole table filtered on the run id:
+    every bucket, every column, averages to 1e-9."""
+    from riptide_spark.operators.metrics import partition_metrics
+
+    cfg = ExtractionJobConfig(
+        output_path=str(tmp_path / "out"), metrics_path=str(tmp_path / "metrics")
+    )
+    run_extraction_job(spark, _pages_df(spark, n=40), cfg)
+    second = run_extraction_job(spark, _pages_df(spark, n=100), cfg)
+    assert second.rows_written == 60
+
+    full = TableIO(spark, cfg.output_path).read().filter(F.col("run_id") == second.run_id)
+    want = {r["partition_id"]: r.asDict() for r in partition_metrics(full, second.run_id).collect()}
+    sidecar = TableIO(spark, cfg.metrics_path).read().filter(F.col("run_id") == second.run_id)
+    got = {r["partition_id"]: r.asDict() for r in sidecar.collect()}
+    assert got.keys() == want.keys()
+    for bucket, row in want.items():
+        assert got[bucket].keys() == row.keys()
+        for col, value in row.items():
+            if col.startswith("avg_") and value is not None:
+                assert got[bucket][col] == pytest.approx(value, abs=1e-9), (bucket, col)
+            else:
+                assert got[bucket][col] == value, (bucket, col)
+    assert sum(r["docs_total"] for r in got.values()) == second.rows_written
+
+
+RETRY_JOB = """
+import json, sys
+
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+
+from riptide_spark.plans.pipeline import ExtractionJobConfig, run_extraction_job
+from riptide_spark.session import build_session
+from riptide_spark.sources.catalog import TableIO
+from riptide_spark.sources.pages import pages_dataframe, synth_page
+
+work, n = sys.argv[1], int(sys.argv[2])
+# The last url of the last input partition: its task has already passed
+# earlier rows downstream (small batches) when the first attempt fails.
+victim = synth_page(n - 1, 5)["url"]
+spark = build_session(
+    "retry-count", master="local[2,2]", shuffle_partitions=2,
+    extra_conf={
+        "spark.driver.memory": "1g",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4",
+        "spark.sql.execution.python.udf.maxRecordsPerBatch": "4",
+    },
+)
+
+
+@F.udf("string")
+def flaky(url):
+    if url == victim and TaskContext.get().attemptNumber() == 0:
+        raise RuntimeError("injected first-attempt failure")
+    return url
+
+
+report = {}
+for layout, by_bucket in (("bucketed", True), ("flat", False)):
+    cfg = ExtractionJobConfig(
+        output_path=f"{work}/{layout}/out", metrics_path=f"{work}/{layout}/metrics",
+        write_partitioned_by_bucket=by_bucket,
+    )
+    pages = pages_dataframe(spark, n, seed=5, partitions=2).withColumn("url", flaky("url"))
+    result = run_extraction_job(spark, pages, cfg)
+    out = TableIO(spark, cfg.output_path).read()
+    metrics = TableIO(spark, cfg.metrics_path)
+    report[layout] = {
+        "rows_written": result.rows_written,
+        "readback": out.count(),
+        "distinct_urls": out.select("url").distinct().count(),
+        "victim_rows": out.filter(F.col("url") == victim).count(),
+        "manifest_rows": [m.rows for m in TableIO(spark, cfg.output_path).manifests()],
+        "metrics_manifest_rows": [m.rows for m in metrics.manifests()],
+        "metrics_rows": metrics.read().count(),
+        "docs_total": metrics.read().agg(F.sum("docs_total")).first()[0],
+    }
+spark.stop()
+print(json.dumps(report))
+"""
+
+
+def test_observed_count_survives_task_retry(tmp_path):
+    """The append counts its rows with an Observation inside the write. A
+    task whose first attempt fails partway through must be counted once:
+    ``local[2,2]`` allows one retry (plain ``local[N]`` never retries), and
+    a Python UDF on the input raises on one url in attempt 0 only."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "retry_job.py"
+    script.write_text(RETRY_JOB)
+    n = 48
+    proc = subprocess.run(
+        [sys.executable, str(script), str(tmp_path / "work"), str(n)],
+        cwd=repo,  # executor Python workers import riptide_spark from cwd
+        env={**os.environ, "PYTHONPATH": repo},
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "injected first-attempt failure" in proc.stderr  # the retry happened
+    report = json.loads(proc.stdout.strip().splitlines()[-1])
+    for layout, r in report.items():
+        assert r["rows_written"] == r["readback"] == r["distinct_urls"] == n, (layout, r)
+        assert r["victim_rows"] == 1, (layout, r)
+        assert r["manifest_rows"] == [n], (layout, r)
+        assert r["metrics_manifest_rows"] == [r["metrics_rows"]], (layout, r)
+        assert r["docs_total"] == n, (layout, r)
