@@ -120,13 +120,16 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
 
     # Headline: full extraction job (gate → route → extract → bucketed write).
     from riptide_spark.plans.pipeline import ExtractionJobConfig, run_extraction_job
+    from riptide_spark.sources.pages import pages_dataframe
 
     # Warm-up: spin up Python workers + codegen once (the analog of the
-    # reference's WASM AOT warm cache — it measures warm throughput too).
+    # reference's WASM AOT warm cache — it measures warm throughput too) on
+    # a separately generated 256-page corpus. Not pages.limit(256): Spark
+    # plans the UDF below the CollectLimit, so that extracts the whole input.
     warm_dir = tempfile.mkdtemp(prefix="riptide_bench_warm_")
     run_extraction_job(
         spark,
-        pages.limit(256),
+        pages_dataframe(spark, 256, seed=SEED),
         ExtractionJobConfig(output_path=os.path.join(warm_dir, "out"), resume=False),
     )
     log("[bench] warm-up done")
@@ -135,7 +138,6 @@ def run_bench(cpus: int, sf_dir: str) -> dict:
     config = ExtractionJobConfig(
         output_path=os.path.join(out_dir, "out"),
         metrics_path=os.path.join(out_dir, "metrics"),
-        target_partitions=cpus * 2,
         resume=False,
     )
     start = time.perf_counter()
@@ -263,13 +265,14 @@ def run_scale_dial(cpus: int, sfs=(0.1, 1.0)) -> dict:
             ExtractionJobConfig,
             run_extraction_job,
         )
+        from riptide_spark.sources.pages import pages_dataframe
 
         timings: dict[str, float] = {}
 
         warm_dir = tempfile.mkdtemp(prefix="riptide_scale_warm_")
         run_extraction_job(
             spark,
-            pages.limit(256),
+            pages_dataframe(spark, 256, seed=SEED),
             ExtractionJobConfig(output_path=os.path.join(warm_dir, "out"), resume=False),
         )
         out_dir = tempfile.mkdtemp(prefix="riptide_scale_out_")
@@ -277,11 +280,7 @@ def run_scale_dial(cpus: int, sfs=(0.1, 1.0)) -> dict:
         result = run_extraction_job(
             spark,
             pages,
-            ExtractionJobConfig(
-                output_path=os.path.join(out_dir, "out"),
-                target_partitions=cpus * 2,
-                resume=False,
-            ),
+            ExtractionJobConfig(output_path=os.path.join(out_dir, "out"), resume=False),
         )
         timings["extract_pipeline"] = round(time.perf_counter() - t0, 3)
         log(

@@ -63,40 +63,56 @@ class Element:
     Attribute names are lowercased; for duplicate attributes the first
     occurrence wins. A valueless attribute maps to ``""``.
 
-    ``pos`` is the element's document-order index; the root additionally
-    carries a flat element list + tag index (built once, lazily) so selector
-    queries don't re-walk the tree — the extraction UDF runs dozens of
-    queries per document and this single-pass index is the difference
-    between O(queries × nodes) and O(nodes + matches).
+    ``pos`` is the element's document-order index, set by the parser. A
+    node that selectors are run from (the document root, or a sub-element
+    such as a table) lazily builds, in one walk of its subtree, a flat
+    element list plus four indexes, each list in document order: by tag,
+    by class token, by id and by attribute name. A simple selector then
+    starts from the shortest list any of its parts selects and filters it
+    with ``matches`` — the extraction UDF runs dozens of queries per
+    document, and this is the difference between O(queries × nodes) and
+    O(nodes + candidates).
     """
 
-    __slots__ = ("tag", "attrs", "children", "parent", "pos", "_flat", "_tagidx")
+    __slots__ = ("tag", "attrs", "children", "parent", "pos", "_flat", "_idx")
 
-    def __init__(self, tag: str, attrs: dict[str, str], parent: "Element | None"):
+    def __init__(self, tag: str, attrs: dict[str, str], parent: "Element | None", pos: int = -1):
         self.tag = tag
         self.attrs = attrs
         self.children: list[object] = []
         self.parent = parent
-        self.pos = -1
+        self.pos = pos
         self._flat: list["Element"] | None = None
-        self._tagidx: dict[str, list["Element"]] | None = None
+        # (tag, class token, id, attribute name) → elements, in document order.
+        self._idx: tuple[dict[str, list["Element"]], ...] | None = None
 
     def _ensure_index(self) -> None:
         if self._flat is not None:
             return
         flat: list[Element] = []
-        tagidx: dict[str, list[Element]] = {}
+        tags: dict[str, list[Element]] = {}
+        classes: dict[str, list[Element]] = {}
+        ids: dict[str, list[Element]] = {}
+        names: dict[str, list[Element]] = {}
         stack: list[object] = list(reversed(self.children))
         while stack:
             node = stack.pop()
             if isinstance(node, str):
                 continue
-            node.pos = len(flat)
             flat.append(node)
-            tagidx.setdefault(node.tag, []).append(node)
+            tags.setdefault(node.tag, []).append(node)
+            attrs = node.attrs
+            if attrs:
+                for name in attrs:
+                    names.setdefault(name, []).append(node)
+                tokens = attrs.get("class", "").split()
+                for token in dict.fromkeys(tokens) if len(tokens) > 1 else tokens:
+                    classes.setdefault(token, []).append(node)
+                if "id" in attrs:
+                    ids.setdefault(attrs["id"], []).append(node)
             stack.extend(reversed(node.children))
         self._flat = flat
-        self._tagidx = tagidx
+        self._idx = (tags, classes, ids, names)
 
     def get(self, name: str) -> str | None:
         return self.attrs.get(name)
@@ -133,6 +149,7 @@ class _TreeBuilder(HTMLParser):
         super().__init__(convert_charrefs=True)
         self.root = Element("#document", {}, None)
         self._stack: list[Element] = [self.root]
+        self._count = 0  # elements so far: the next one's document position
 
     # -- tag events -----------------------------------------------------
     def handle_starttag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
@@ -141,7 +158,8 @@ class _TreeBuilder(HTMLParser):
             if name not in attr_map:
                 attr_map[name] = value if value is not None else ""
         parent = self._stack[-1]
-        el = Element(tag, attr_map, parent)
+        el = Element(tag, attr_map, parent, self._count)
+        self._count += 1
         parent.children.append(el)
         if tag not in VOID_ELEMENTS:
             self._stack.append(el)
@@ -152,7 +170,8 @@ class _TreeBuilder(HTMLParser):
             if name not in attr_map:
                 attr_map[name] = value if value is not None else ""
         parent = self._stack[-1]
-        parent.children.append(Element(tag, attr_map, parent))
+        parent.children.append(Element(tag, attr_map, parent, self._count))
+        self._count += 1
 
     def handle_endtag(self, tag: str) -> None:
         if tag in VOID_ELEMENTS:
@@ -212,11 +231,18 @@ def parse(html: str) -> Element:
 
 
 class _SimpleSelector:
-    __slots__ = ("tag", "conds")
+    __slots__ = ("tag", "conds", "keys")
 
     def __init__(self, tag: str | None, conds: list[tuple[str, str, str]]):
         self.tag = tag
-        self.conds = conds  # (attr, op, value); op in {"has", "=", "*=", "^="}
+        self.conds = conds  # (attr, op, value); op in {"has", "=", "*=", "^=", "~="}
+        # (Element._idx slot, key) of a list every match is on, per condition.
+        self.keys = [
+            (1, value) if (attr, op) == ("class", "~=")
+            else (2, value) if (attr, op) == ("id", "=")
+            else (3, attr)
+            for attr, op, value in conds
+        ]
 
     def matches(self, el: Element) -> bool:
         if self.tag is not None and el.tag != self.tag:
@@ -382,24 +408,30 @@ def compile_selector(selector: str) -> _CompiledSelector | None:
     return result
 
 
-def _chain_candidates(root: Element, chain: list[_SimpleSelector]) -> list[Element]:
-    """Candidates for a chain, narrowed by the target's tag when it has one."""
-    last = chain[-1]
-    if last.tag is not None:
-        return root._tagidx.get(last.tag, [])
-    return root._flat
+def _candidates(root: Element, simple: _SimpleSelector):
+    """The shortest index list that holds every match of ``simple`` under
+    ``root``, in document order (``root`` indexed)."""
+    idx = root._idx
+    best = root._flat if simple.tag is None else idx[0].get(simple.tag, ())
+    for slot, key in simple.keys:
+        found = idx[slot].get(key, ())
+        if len(found) < len(best):
+            best = found
+    return best
 
 
 def _chain_feasible(root: Element, chain: list[_SimpleSelector]) -> bool:
     """Cheap pruning for descendant chains: if any ancestor simple matches
     NOTHING in the document (the common case for breadcrumb/nav selectors
     on ordinary pages), the chain can't match — one early-exit scan per
-    ancestor beats an ancestor walk per candidate."""
+    ancestor beats an ancestor walk per candidate. Checked against the
+    whole document, since a sub-element's matches may have their ancestors
+    above it."""
+    while root.parent is not None:
+        root = root.parent
+    root._ensure_index()
     for simple in chain[:-1]:
-        candidates = (
-            root._tagidx.get(simple.tag, []) if simple.tag is not None else root._flat
-        )
-        if not any(simple.matches(el) for el in candidates):
+        if not any(simple.matches(el) for el in _candidates(root, simple)):
             return False
     return True
 
@@ -413,7 +445,7 @@ def query_selector_all(root: Element, selector: str) -> list[Element]:
         chain = compiled.chains[0]
         if len(chain) == 1:
             simple = chain[0]
-            candidates = _chain_candidates(root, chain)
+            candidates = _candidates(root, simple)
             # Bare-tag selector ("p", "h2", …): the tag index IS the
             # answer — the hot case for the native content ladder.
             if simple.tag is not None and not simple.conds:
@@ -423,14 +455,14 @@ def query_selector_all(root: Element, selector: str) -> list[Element]:
             return []
         return [
             el
-            for el in _chain_candidates(root, chain)
+            for el in _candidates(root, chain[-1])
             if compiled._chain_matches(chain, el)
         ]
     seen: dict[int, Element] = {}
     for chain in compiled.chains:
         if len(chain) > 1 and not _chain_feasible(root, chain):
             continue
-        for el in _chain_candidates(root, chain):
+        for el in _candidates(root, chain[-1]):
             if el.pos not in seen and compiled._chain_matches(chain, el):
                 seen[el.pos] = el
     return [seen[pos] for pos in sorted(seen)]
@@ -443,7 +475,7 @@ def query_selector(root: Element, selector: str) -> Element | None:
     root._ensure_index()
     if len(compiled.chains) == 1:
         chain = compiled.chains[0]
-        candidates = _chain_candidates(root, chain)
+        candidates = _candidates(root, chain[-1])
         # First match in document order, without building the full list.
         if len(chain) == 1:
             simple = chain[0]

@@ -276,10 +276,3 @@ def extraction_mode_for_route(content_mode: Column) -> Column:
         .otherwise(F.lit("article"))
     )
 
-
-def escalation_predicate(quality: Column, words: Column) -> Column:
-    """Probe-first escalation rule (engine_selection.rs:450-469):
-    quality < 30 ∨ words < 50 ∨ (quality < 50 ∧ words < 100)."""
-    quality = F.coalesce(quality, F.lit(0))
-    words = F.coalesce(words, F.lit(0))
-    return (quality < 30) | (words < 50) | ((quality < 50) & (words < 100))

@@ -19,9 +19,12 @@ Plan properties worth knowing at 100 TB:
   column pruning.
 * probes-first escalation happens row-locally inside the UDF — no second
   shuffle (see extract_udf.py).
-* with ``target_partitions`` set, one wide shuffle total (the bucket/salt
-  repartition before extraction); without it (the shipped default) the plan
-  has no shuffle at all. Everything after the UDF is narrow.
+* the shipped plan is Scan → codegen (gate) → ArrowEvalPython → rebalance
+  Exchange → write: ``TableIO.append`` rebalances on ``url_bucket`` so each
+  bucket is written by one task (one file per bucket per run, unless AQE
+  splits a bucket larger than its advisory size), and the UDF below the
+  Exchange keeps the scan's parallelism. Setting ``target_partitions``
+  adds a second shuffle, the bucket/salt repartition before extraction.
 * one pass over the extracted rows: the append counts them inside the write,
   and the sidecar reads back only the files this run wrote.
 """
@@ -70,9 +73,11 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
     # it forever and the url would silently vanish from the corpus
     # (reference records a per-URL error envelope, pipeline.rs:525-557).
     # Their html is blanked *before* gate/shuffle/Arrow so the 20 MB+
-    # payload never rides the wire or crosses into Python; the UDF sees
-    # mode='oversize' and emits the reference's InvalidHtml message with
-    # the original size (common_validation.rs:81-85).
+    # payload never rides the wire or crosses into Python. Their
+    # content_mode is 'oversize', so the UDF runs its article path on the
+    # empty html, and the error column below restores the reference's
+    # InvalidHtml message with the original size
+    # (common_validation.rs:81-85).
     df = df.withColumn("_oversize_bytes",
                        F.when(F.octet_length("html") > MAX_CONTENT_BYTES,
                               F.octet_length("html")))
@@ -90,7 +95,7 @@ def extraction_plan(pages: DataFrame, config: ExtractionJobConfig) -> DataFrame:
         .otherwise(F.col("content_mode")),
     )
 
-    # Bucketed url-hash partitioning with hot-host salting; one wide shuffle.
+    # Bucketed url-hash partitioning with hot-host salting.
     df = with_partitioning(df, buckets=config.buckets, salts=config.salts,
                            hot_hosts=config.hot_hosts)
     # Prune to exactly what the extraction stage needs BEFORE the shuffle:

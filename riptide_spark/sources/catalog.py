@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from dataclasses import dataclass
 
@@ -55,6 +56,28 @@ class TableIO:
         self.manifest_dir = os.path.join(path, "_manifests")
 
     # -- metadata ---------------------------------------------------------
+    def _recover_compaction(self) -> None:
+        """Repair what a ``compact()`` cut short before anyone reads the
+        table. Cut between its two renames, ``data/`` is missing and the
+        old data sits in a ``data.pre-compact-*`` sibling, which the
+        committed manifests still describe: rename it back and drop the
+        ``data.compact-*`` scratch copy. Cut after them, while the old
+        copy was being deleted, a ``data.pre-compact-*`` sibling stands
+        next to ``data/``: finish deleting it."""
+        if not os.path.isdir(self.path):
+            return
+        prefix = os.path.basename(self.data_path)
+        siblings = [os.path.join(self.path, n) for n in os.listdir(self.path)]
+        old = [p for p in siblings if os.path.basename(p).startswith(prefix + ".pre-compact-")]
+        if not old:
+            return
+        if not os.path.isdir(self.data_path):
+            old.sort(key=os.path.getmtime)
+            os.rename(old.pop(), self.data_path)
+            old += [p for p in siblings if os.path.basename(p).startswith(prefix + ".compact-")]
+        for path in old:
+            shutil.rmtree(path, ignore_errors=True)
+
     def exists(self) -> bool:
         """True iff the table has any data files — deliberately NOT gated on
         a committed manifest: a crash between the data write and the
@@ -62,6 +85,7 @@ class TableIO:
         orphaned rows (they are valid extractions), otherwise the rerun
         would duplicate them. Manifests are lineage, not the liveness
         signal."""
+        self._recover_compaction()
         return any(
             name.endswith(".parquet")
             for _, _, files in os.walk(self.data_path)
@@ -88,6 +112,7 @@ class TableIO:
 
     def data_files(self) -> list[str]:
         """Relative paths of every parquet data file currently on disk."""
+        self._recover_compaction()
         out = []
         for root, _, files in os.walk(self.data_path):
             for f in files:
@@ -118,6 +143,7 @@ class TableIO:
 
     # -- IO ---------------------------------------------------------------
     def read(self) -> DataFrame:
+        self._recover_compaction()
         return self.spark.read.parquet(self.data_path)
 
     def read_files(self, files: list[str], schema: StructType) -> DataFrame:
@@ -145,9 +171,21 @@ class TableIO:
         uncommitted snapshot that the next run's anti-join silently
         resolves — the urls are present, so they are skipped; no
         duplicates, no loss). The count is observed inside the write, so
-        the manifest is committed once and never needs a re-scan."""
+        the manifest is committed once and never needs a re-scan.
+
+        With ``partition_by``, rows are first rebalanced on those columns
+        (Spark's ``REBALANCE`` hint, the analog of Iceberg's
+        ``write.distribution-mode=hash``): each partition value is written
+        by one task, so a run adds about one file per value it touches
+        (more only where AQE splits a value larger than its advisory
+        partition size) instead of one per input partition and value. The
+        Exchange sits above whatever ``df`` computes, so the stages below
+        it keep their scan parallelism, and the count is observed in the
+        write stage above it."""
         run_id = run_id or uuid.uuid4().hex[:12]
         before = set(self.data_files())
+        if partition_by:
+            df = df.hint("rebalance", *partition_by)
         rows = self._write_counted(df, self.data_path, "append", partition_by)
         written = [f for f in self.data_files() if f not in before]
         manifest = Manifest(run_id=run_id, rows=rows, committed=True, files=written)
@@ -193,9 +231,9 @@ class TableIO:
         falls back to counting the done side — exact, just slower. Only
         after step 4 does the fast path re-engage. On a real cluster this
         whole method is Iceberg's atomic ``rewrite_data_files`` +
-        ``rewrite_manifests`` snapshot commit."""
-        import shutil
-
+        ``rewrite_manifests`` snapshot commit. A cut between the two renames
+        of step 2 leaves no ``data/``: ``_recover_compaction`` puts the old
+        copy back before the table is next read."""
         if not self.exists():
             raise ValueError(f"nothing to compact at {self.data_path}")
         if partition_by is None:

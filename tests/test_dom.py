@@ -104,6 +104,81 @@ def test_class_selector_word_match():
     assert dom.query_selector_all(root, ".bread a") == []
 
 
+# Selector index vs brute force -------------------------------------------
+
+# Sub-element selectors of functions/tables.py, on top of what the
+# extraction UDF compiles.
+_TABLE_SELECTORS = ("table", "caption", "thead tr", "tbody tr", "tr", "td, th", "th")
+
+
+def _extractor_selectors(pages) -> list[str]:
+    """Every selector the extraction UDF compiles on ``pages``, in all of
+    its HTML modes."""
+    from riptide_spark.operators.extract_udf import _extract_one
+
+    used: dict[str, None] = {}
+    real = dom.compile_selector
+
+    def spy(selector):
+        used.setdefault(selector, None)
+        return real(selector)
+
+    dom.compile_selector = spy
+    try:
+        for page in pages:
+            for mode in ("article", "probes_first", "dom"):
+                _extract_one(page["html"], page["url"], mode)
+    finally:
+        dom.compile_selector = real
+    return list(used) + [s for s in _TABLE_SELECTORS if s not in used]
+
+
+def _brute(root: dom.Element, selector: str) -> list[dom.Element]:
+    compiled = dom.compile_selector(selector)
+    if compiled is None:
+        return []
+    return [el for el in root.iter_elements() if compiled.matches(el)]
+
+
+def test_indexed_queries_equal_brute_force():
+    """query_selector_all/query_selector answer from the tag, class, id and
+    attribute indexes; on seeded pages of every archetype, from the
+    document and from sub-elements (queried first, so their own indexes
+    exist before the document's), they must equal a filter of
+    iter_elements() by the compiled selector."""
+    from riptide_spark.sources.pages import ARCHETYPES, synth_page
+
+    pages, seen = [], {}
+    for i in range(600):
+        page = synth_page(i, 21)
+        if seen.get(page["archetype"], 0) < 3:
+            seen[page["archetype"]] = seen.get(page["archetype"], 0) + 1
+            pages.append(page)
+    assert set(seen) == {name for name, _ in ARCHETYPES}
+    pages.append({"url": "https://t.example/x", "html": (
+        b"<body><table id='t' class='a b a'><caption>c</caption><thead><tr><th>h</th></tr>"
+        b"</thead><tbody><tr><td><table><tr><td>in</td></tr></table></td></tr></tbody></table>"
+        b"<div class='tag topic' role='navigation'><a href='/x' class='breadcrumb'>x</a></div>"
+        b"<nav aria-label='breadcrumb'><a href='/y'>y</a></nav></body>"
+    )})
+    selectors = _extractor_selectors(pages)
+    assert len(selectors) > 40
+    checked = 0
+    for page in pages:
+        root = dom.parse(page["html"].decode("utf-8", errors="replace"))
+        subs = [el for el in root.iter_elements() if el.tag in (
+            "body", "article", "main", "table", "tbody", "nav", "footer", "div")][:8]
+        for node in subs + [root]:
+            for selector in selectors:
+                want = _brute(node, selector)
+                got = dom.query_selector_all(node, selector)
+                assert got == want, (page["url"], node.tag, selector)
+                first = dom.query_selector(node, selector)
+                assert first is (want[0] if want else None), (page["url"], node.tag, selector)
+                checked += 1
+    assert checked > 10_000
+
+
 def test_malformed_html_never_raises():
     for bad in ["<", "<div", "<<>><", "<a href=>", "\x00\xff<p>", "<![bogus["]:
         dom.parse(bad)

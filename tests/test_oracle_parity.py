@@ -62,9 +62,11 @@ def contract():
 
 
 def _oracle_names():
-    from riptide_spark.oracle_queries import GENERATORS, UDF_ORACLES
+    # udf_oracles() drops the oracles whose queries all_queries() drops
+    # (same reference_available() predicate), so every name has both sides.
+    from riptide_spark.oracle_queries import GENERATORS, udf_oracles
 
-    return sorted(GENERATORS) + sorted(UDF_ORACLES)
+    return sorted(GENERATORS) + sorted(udf_oracles())
 
 
 @pytest.mark.parametrize("name", _oracle_names())

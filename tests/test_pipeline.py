@@ -507,6 +507,77 @@ def test_compaction_crash_window_degrades_to_slow_path(spark, tmp_path):
     assert manifest.rows == 50
 
 
+def test_compaction_cut_between_renames_recovers(spark, tmp_path, monkeypatch):
+    """A compact() cut between its two renames leaves no data/ dir, only a
+    data.pre-compact-* copy (the data the manifests describe) and the
+    data.compact-* scratch. The next job must see the old table again:
+    skip exactly the done urls, write no duplicates, and leave a complete
+    ledger with no leftover siblings."""
+    cfg = ExtractionJobConfig(output_path=str(tmp_path / "out"), resume=True)
+    run_extraction_job(spark, _pages_df(spark, n=30), cfg)
+    run_extraction_job(spark, _pages_df(spark, n=50), cfg)
+    io = TableIO(spark, cfg.output_path)
+
+    rename = os.rename
+    calls = []
+
+    def cut_at_second(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("simulated crash between the renames")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", cut_at_second)
+    with pytest.raises(OSError, match="simulated crash"):
+        io.compact()
+    monkeypatch.undo()
+    siblings = os.listdir(cfg.output_path)
+    assert "data" not in siblings
+    assert any(".pre-compact-" in n for n in siblings)
+    assert any(n.startswith("data.compact-") for n in siblings)
+
+    run = run_extraction_job(spark, _pages_df(spark, n=70), cfg)
+    assert run.rows_skipped_resume == 50
+    assert run.rows_written == 20
+    out = io.read()
+    assert out.count() == 70
+    assert out.select("url").distinct().count() == 70
+    assert io.ledger_complete()
+    assert sorted(os.listdir(cfg.output_path)) == ["_manifests", "data"]
+
+
+def test_stale_pre_compact_copy_is_removed(tmp_path):
+    """A compact() cut while deleting the old copy leaves a
+    data.pre-compact-* dir next to data/: it is dropped, not read."""
+    io = TableIO(None, str(tmp_path / "t"))
+    part = os.path.join(io.data_path, "url_bucket=1")
+    os.makedirs(part)
+    open(os.path.join(part, "a.parquet"), "wb").close()
+    stale = io.data_path + ".pre-compact-0000"
+    os.makedirs(os.path.join(stale, "url_bucket=1"))
+    open(os.path.join(stale, "url_bucket=1", "b.parquet"), "wb").close()
+    assert io.exists()
+    assert not os.path.exists(stale)
+    assert io.data_files() == [os.path.join("url_bucket=1", "a.parquet")]
+
+
+def test_partitioned_append_writes_one_file_per_bucket(spark, tmp_path):
+    """The append rebalances on url_bucket before writing, so every bucket
+    a run touches gets exactly one file however many input partitions
+    there are, and the observed row count is unchanged."""
+    cfg = ExtractionJobConfig(output_path=str(tmp_path / "out"), resume=False)
+    pages = pages_dataframe(spark, 200, seed=SEED, partitions=4)
+    result = run_extraction_job(spark, pages, cfg)
+    io = TableIO(spark, cfg.output_path)
+    [manifest] = io.manifests()
+    dirs = [os.path.dirname(f) for f in manifest.files]
+    assert len(dirs) == len(set(dirs))
+    touched = {r[0] for r in io.read().select("url_bucket").distinct().collect()}
+    assert {int(d.split("=", 1)[1]) for d in dirs} == touched
+    assert len(touched) > 40
+    assert result.rows_written == manifest.rows == io.read().count() == 200
+
+
 def test_sidecar_from_own_files_matches_full_table_metrics(spark, tmp_path):
     """The sidecar reads back only the files the run's manifest lists. On a
     table that already holds an earlier run, its rows must equal

@@ -1,6 +1,7 @@
-"""Differential proof that the resolve_url fast paths (absolute-href
-urljoin bypass, clean-component percent-encode skip, regex host scan)
-are behavior-identical to the reference implementation they replaced."""
+"""Differential proof that the resolve_url fast paths (root-relative
+origin + href, absolute-href urljoin bypass, clean-component
+percent-encode skip, regex host scan) are behavior-identical to the
+reference implementation they replaced."""
 
 from __future__ import annotations
 
@@ -19,6 +20,14 @@ BASES = [
     "https://www.example.com/base/dir/page.html?bq=1#bf",
     "http://example.com",
     "https://sub.host.example.co.uk:8443/a/b/",
+    "https://user:pw@auth.example.com/in/dir/",     # userinfo
+    "https://default.example.com:443/p",            # default port
+    "http://ported.example.com:8080/p",             # non-default port
+    "https://UPPER.Example.COM/Case/",              # uppercase host
+    "https://bücher.example/straße",                # IDN host
+    "https://bad host.example.com/x",               # invalid host
+    "ftp://files.example.com/pub/",                 # non-http scheme
+    "mailto:someone@example.com",
 ]
 
 HREFS = [
@@ -42,6 +51,11 @@ HREFS = [
     "//protocol.relative.example.com/p",
     "mailto:a@b.com", "javascript:void(0)", "tel:+1-555", "data:text/plain,x",
     "p\\q", "a\\b/c",
+    # root-relative — the origin + href fast path and its exclusions
+    "/", "//h/x", "/\\x", "/a/../b", "/a/./b", "/.", "/..", "/.well-known/x",
+    "/%2e%2e/x", "/p?q'x", "/p?", "/p?#f", "/p#", "/p#a'b", "/p#a?b",
+    "/p?a#b?c", "/ü", "/a b", "/a\tb", "/a\nb", "/p;x", "/p;", "/a//b",
+    "/a:b@c", "/x?q=1&r=/s?t#f#g", "/a{b}", "/a|b", "/a[1]",
 ]
 
 
@@ -121,6 +135,31 @@ def test_fast_paths_match_reference_impl():
                 base,
                 href,
             )
+
+
+def _seeded_pairs(n: int = 2000, seed: int = 5):
+    """Every (page url, href/src/srcset/content value) on n seeded pages."""
+    from riptide_spark.html import dom
+    from riptide_spark.sources.pages import synth_page
+
+    for i in range(n):
+        page = synth_page(i, seed)
+        root = dom.parse(page["html"].decode("utf-8", errors="replace"))
+        for el in root.iter_elements():
+            for name in ("href", "src", "content"):
+                if name in el.attrs:
+                    yield page["url"], el.attrs[name]
+            for part in el.attrs.get("srcset", "").split(","):
+                if part.split():
+                    yield page["url"], part.split()[0]
+
+
+def test_seeded_page_pairs_match_reference():
+    pairs = list(_seeded_pairs())
+    assert len(pairs) > 20_000
+    assert sum(h.startswith("/") and not h.startswith("//") for _, h in pairs) > len(pairs) // 2
+    for base, href in pairs:
+        assert resolve_url(base, href) == _reference_resolve(base, href), (base, href)
 
 
 def test_bare_query_kept_on_absolute_href():
